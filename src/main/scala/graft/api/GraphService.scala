@@ -198,7 +198,7 @@ final class GraphService(
         .map(f => Future(GraphStore.materialize(spark, f)))), Duration.Inf)
     val staged = graft.etl.StagedGraph(links, cats, kws, bel, hkw)
     // The five table writes touch DISJOINT paths (each merge reads only
-    // its own table plus the pinned staged frame; each overwriteSafely
+    // its own table plus the pinned staged frame; each table commit
     // stages through its own temp dir), so they run concurrently —
     // guide §2.6 again: five sequential write actions stack five
     // job+FS-commit latencies per micro-batch for no ordering reason.

@@ -1,8 +1,14 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed labeled-property-graph store.
   *
@@ -17,36 +23,52 @@ import org.apache.spark.sql.functions._
   * each table is just a Parquet dataset: node tables are written
   * partitioned only when large (Link), dimension tables stay single
   * footer so Catalyst broadcast-joins them for free.
+  *
+  * Reads are resolved once per write, like the catalog of an embedded
+  * database: each table's parquet relation (file listing + schema) is
+  * resolved when the store writes the table — from the schema it just
+  * wrote, no inference job — and every [[nodes]]/[[edges]] call wraps
+  * that relation in a fresh plan, running no job and listing no files.
+  * A table this session has not written yet is resolved by inference
+  * on first read. The resolved relations are shared by every store on
+  * the same root in a session, so within a session GraphStore must be
+  * the only writer of its root: a file written behind its back stays
+  * invisible until the store next writes that table.
   */
 final class GraphStore(spark: SparkSession, root: String) {
 
-  private def nodePath(label: String) = s"$root/nodes/$label"
-  private def edgePath(relType: String) = s"$root/edges/$relType"
+  private def hadoopConf = spark.sessionState.newHadoopConf()
+
+  // qualified once, so every store on this root keys its tables alike
+  private lazy val qualifiedRoot = {
+    val p = new Path(root)
+    p.getFileSystem(hadoopConf).makeQualified(p).toString
+  }
+  private[store] def nodePath(label: String) = s"$qualifiedRoot/nodes/$label"
+  private[store] def edgePath(relType: String) = s"$qualifiedRoot/edges/$relType"
 
   // ---- DDL / catalog (reference S8: CREATE NODE TABLE / show_tables) ----
 
   /** Create a node table by writing an empty DataFrame with the given
     * schema. Idempotent: existing tables are left untouched. */
-  def createNodeTable(label: String, schema: org.apache.spark.sql.types.StructType): Unit =
-    if (!exists(nodePath(label))) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode("overwrite").parquet(nodePath(label))
-    }
+  def createNodeTable(label: String, schema: StructType): Unit =
+    createTable(nodePath(label), schema)
 
   def createRelTable(relType: String): Unit =
-    if (!exists(edgePath(relType))) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], graft.model.GraphSchema.edge)
-        .write.mode("overwrite").parquet(edgePath(relType))
-    }
+    createTable(edgePath(relType), graft.model.GraphSchema.edge)
+
+  private def createTable(path: String, schema: StructType): Unit =
+    if (!exists(path))
+      commitTable(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), path)
 
   /** `CALL show_tables()` analog (reference Edits.ipynb:1139,1157).
     * Goes through the Hadoop FileSystem API like every other store op,
     * so the catalog listing works on any supported root (HDFS/S3/...),
     * not just local paths. */
   def showTables(): Seq[(String, String)] = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = hadoopConf
     def list(dir: String, kind: String): Seq[(String, String)] = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/$dir")
+      val p = new Path(s"$root/$dir")
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) Nil
       else fs.listStatus(p).filter(_.isDirectory).map(s => (s.getPath.getName, kind)).toSeq.sorted
@@ -55,9 +77,15 @@ final class GraphStore(spark: SparkSession, root: String) {
   }
 
   private def exists(path: String): Boolean = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    hPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(hPath)
+    val hPath = new Path(path)
+    hPath.getFileSystem(hadoopConf).exists(hPath)
   }
+
+  /** A table as stored, layout column included: a fresh plan over the
+    * table's resolved relation (fresh attribute ids, so two reads of
+    * one table self-join like two `spark.read.parquet` calls). */
+  private[store] def table(path: String): DataFrame =
+    spark.baseRelationToDataFrame(GraphStore.relation(spark, path))
 
   /** Reads hide the physical layout: a table stored hash-partitioned
     * (see [[upsertNodesPartitioned]]) carries a `__bucket` hive
@@ -66,27 +94,43 @@ final class GraphStore(spark: SparkSession, root: String) {
   private def dropLayout(df: DataFrame): DataFrame =
     if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
 
-  def nodes(label: String): DataFrame = dropLayout(spark.read.parquet(nodePath(label)))
-  def edges(relType: String): DataFrame = dropLayout(spark.read.parquet(edgePath(relType)))
+  def nodes(label: String): DataFrame = dropLayout(table(nodePath(label)))
+  def edges(relType: String): DataFrame = dropLayout(table(edgePath(relType)))
 
-  def writeNodes(label: String, df: DataFrame): Unit =
-    overwriteSafely(df, nodePath(label))
-  def writeEdges(relType: String, df: DataFrame): Unit =
-    overwriteSafely(df, edgePath(relType))
+  def writeNodes(label: String, df: DataFrame): Unit = commitTable(df, nodePath(label))
+  def writeEdges(relType: String, df: DataFrame): Unit = commitTable(df, edgePath(relType))
 
-  /** Overwriting the table we are also reading from would delete the
-    * input mid-scan; stage through a temp dir then swap. Single-writer
-    * discipline is assumed (as in the reference's embedded Kùzu). */
-  private def overwriteSafely(df: DataFrame, path: String): Unit = {
-    val tmp = path + "__staging"
-    df.write.mode("overwrite").parquet(tmp)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
+  /** The one way the store writes a table, and the only place a
+    * table's relation is replaced.
+    *
+    * A whole-table write stages into a temp dir and then swaps it in:
+    * overwriting the table we are also reading from would delete the
+    * input mid-scan. Single-writer discipline is assumed (as in the
+    * reference's embedded Kùzu). With `onlyWrittenPartitions` the write
+    * goes straight into the table with dynamic partition overwrite,
+    * replacing just the partitions present in `df` (Spark stages those
+    * itself). Either way the table is then re-resolved from the data
+    * schema just written, so the next read runs no inference job; the
+    * partition columns are still inferred from the directory names, as
+    * a plain parquet read does, which runs no job either. */
+  private def commitTable(df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
+      onlyWrittenPartitions: Boolean = false): Unit = {
+    val writer = df.write.mode("overwrite").partitionBy(partitionBy: _*)
+    if (onlyWrittenPartitions) {
+      writer.option("partitionOverwriteMode", "dynamic").parquet(path)
+    } else {
+      val tmp = path + "__staging"
+      writer.parquet(tmp)
+      val fs = new Path(path).getFileSystem(hadoopConf)
+      fs.delete(new Path(path), true)
+      fs.rename(new Path(tmp), new Path(path))
+    }
     // the shared FileStatusCache may still list the replaced part
     // files; without this, the next read throws FAILED_READ_FILE
     spark.catalog.refreshByPath(path)
+    GraphStore.resolved(spark, path, spark.read
+      .schema(StructType(df.schema.filterNot(f => partitionBy.contains(f.name))))
+      .parquet(path))
   }
 
   /** Write a node table hive-partitioned by a column (the "large
@@ -95,16 +139,8 @@ final class GraphStore(spark: SparkSession, root: String) {
     * whole directories at planning time (`PartitionFilters` in the
     * scan, no data files touched for pruned partitions). Dimension
     * tables should stay unpartitioned single-footer datasets. */
-  def writeNodesPartitioned(label: String, df: DataFrame, partitionCol: String): Unit = {
-    val path = nodePath(label)
-    val tmp = path + "__staging"
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
-    spark.catalog.refreshByPath(path)
-  }
+  def writeNodesPartitioned(label: String, df: DataFrame, partitionCol: String): Unit =
+    commitTable(df, nodePath(label), Seq(partitionCol))
 
   // ---- partition-pruned upsert (the 100 TB write path) ----
 
@@ -130,12 +166,12 @@ final class GraphStore(spark: SparkSession, root: String) {
     * bucket, so per-bucket merge == global merge. A table still in the
     * flat layout is migrated on first use (one full rewrite, one-time).
     * The merged batch is staged through a scratch parquet before the
-    * overwrite (same WAL discipline as [[overwriteSafely]]) because
+    * overwrite (same WAL discipline as [[commitTable]]) because
     * its plan reads the very partition files the commit replaces. */
   def upsertNodesPartitioned(label: String, incoming: DataFrame, pk: String,
       buckets: Int): Unit = {
     val path = nodePath(label)
-    val current = spark.read.parquet(path)
+    val current = table(path)
     if (!current.columns.contains(BucketCol)) {
       // one-time layout migration: flat → hash-partitioned. An empty
       // merge stays flat — a zero-row partitionBy write leaves a
@@ -154,10 +190,7 @@ final class GraphStore(spark: SparkSession, root: String) {
         val existingTouched = current.filter(col(BucketCol).isin(touched: _*))
         val merged = GraphStore.materialize(spark,
           GraphStore.mergeByKey(existingTouched, inc, Seq(pk)))
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(BucketCol).parquet(path)
-        spark.catalog.refreshByPath(path)
+        commitTable(merged, path, Seq(BucketCol), onlyWrittenPartitions = true)
       }
     }
   }
@@ -169,20 +202,12 @@ final class GraphStore(spark: SparkSession, root: String) {
   def upsertEdgesPartitioned(relType: String, incoming: DataFrame,
       buckets: Int): Unit = {
     val path = edgePath(relType)
-    val current = spark.read.parquet(path)
+    val current = table(path)
     val inc = incoming.select(col("src"), col("dst"))
     if (!current.columns.contains(BucketCol)) {
       val all = GraphStore.materialize(spark,
         mergeEdges(current, inc).withColumn(BucketCol, bucketExpr("src", buckets)))
-      if (!all.isEmpty) {
-        val tmp = path + "__staging"
-        all.write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
-        val conf = spark.sessionState.newHadoopConf()
-        val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
-        spark.catalog.refreshByPath(path)
-      }
+      if (!all.isEmpty) commitTable(all, path, Seq(BucketCol))
     } else {
       val incB = inc.withColumn(BucketCol, bucketExpr("src", buckets))
       val touched = incB.select(col(BucketCol)).distinct()
@@ -192,10 +217,7 @@ final class GraphStore(spark: SparkSession, root: String) {
         val merged = GraphStore.materialize(spark,
           existingTouched.select(col("src"), col("dst"), col(BucketCol))
             .unionByName(incB).distinct())
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(BucketCol).parquet(path)
-        spark.catalog.refreshByPath(path)
+        commitTable(merged, path, Seq(BucketCol), onlyWrittenPartitions = true)
       }
     }
   }
@@ -292,11 +314,11 @@ final class GraphStore(spark: SparkSession, root: String) {
     * export. File-level copy via the Hadoop FileSystem — no recompute,
     * works on any supported root. Returns the new version. */
   def snapshotNodes(label: String): Int = {
-    val conf = spark.sessionState.newHadoopConf()
-    val src = new org.apache.hadoop.fs.Path(nodePath(label))
+    val conf = hadoopConf
+    val src = new Path(nodePath(label))
     val fs = src.getFileSystem(conf)
     val v = listSnapshots(label).lastOption.getOrElse(0) + 1
-    val dst = new org.apache.hadoop.fs.Path(snapPath(label, v))
+    val dst = new Path(snapPath(label, v))
     fs.mkdirs(dst.getParent)
     org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
     v
@@ -308,8 +330,8 @@ final class GraphStore(spark: SparkSession, root: String) {
 
   /** Available snapshot versions of a node table, ascending. */
   def listSnapshots(label: String): Seq[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/snapshots/$label")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val p = new Path(s"$root/snapshots/$label")
+    val fs = p.getFileSystem(hadoopConf)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
       .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toInt).toSeq.sorted
@@ -332,6 +354,50 @@ final class GraphStore(spark: SparkSession, root: String) {
 
 object GraphStore {
 
+  /** The store's catalog: each table's resolved parquet relation, per
+    * session and qualified table path, so every store on one root in a
+    * session shares it. Sessions are held weakly, as in
+    * [[graft.DerivedCache]]; a relation references its session, so a
+    * session's entries are also dropped when its context stops. The
+    * per-session map is concurrent: the ingest commits write their
+    * five tables from five threads. */
+  private val relations =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, HadoopFsRelation]]()
+
+  private def relationsOf(spark: SparkSession): ConcurrentHashMap[String, HadoopFsRelation] =
+    relations.synchronized {
+      var m = relations.get(spark)
+      if (m == null) {
+        m = new ConcurrentHashMap[String, HadoopFsRelation]()
+        relations.put(spark, m)
+        spark.sparkContext.addSparkListener(new SparkListener {
+          override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+            relations.synchronized(relations.remove(spark))
+        })
+      }
+      m
+    }
+
+  private def relationOf(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+    }.get
+
+  /** A table's relation: the one its last commit resolved, else
+    * resolved by schema inference on this first read. A commit that
+    * races the first read keeps its relation. */
+  private def relation(spark: SparkSession, path: String): HadoopFsRelation = {
+    val m = relationsOf(spark)
+    Option(m.get(path)).getOrElse {
+      val inferred = relationOf(spark.read.parquet(path))
+      Option(m.putIfAbsent(path, inferred)).getOrElse(inferred)
+    }
+  }
+
+  /** Replace a table's relation with the one `df` reads. */
+  private def resolved(spark: SparkSession, path: String, df: DataFrame): Unit =
+    relationsOf(spark).put(path, relationOf(df))
+
   /** Materialize a DataFrame, severing its lineage from any store
     * files it was derived from. Required before a read-modify-write
     * cycle that overwrites tables the plan still references (a lazy
@@ -348,7 +414,7 @@ object GraphStore {
     * are reclaimed by the ContextCleaner once the staged frame is
     * unreferenced, unlike the scratch dirs, which leaked until /tmp
     * cleanup. Durability is unchanged: staging was always in-session
-    * scratch; the store's WAL discipline lives in overwriteSafely.
+    * scratch; the store's WAL discipline lives in commitTable.
     *
     * Cluster caveat (the round-12 advisor's reliability note):
     * localCheckpoint blocks are NON-REPLICATED executor storage with

@@ -176,4 +176,160 @@ class GraphStoreSpec extends SparkSpec {
     val fast = GraphStore.materialize(spark, df)
     assert(fast.collect().length == 3)
   }
+
+  // ---- reads resolved once per write: freshness and identity ----
+
+  private def tempRoot(): String =
+    java.nio.file.Files.createTempDirectory("graftstore_fresh").toString
+
+  private def names(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.as[String].collect().toSeq.sorted
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    df.select("src", "dst").as[(String, String)].collect().toSet
+
+  test("fresh root: created tables read back empty with their DDL schema") {
+    val store = new GraphStore(spark, tempRoot())
+    store.createNodeTable("link", graft.model.GraphSchema.link)
+    store.createRelTable("HAS_KEYWORD")
+    assert(store.nodes("link").count() == 0 && store.edges("HAS_KEYWORD").count() == 0)
+    assert(store.nodes("link").columns.toSeq == graft.model.GraphSchema.link.fieldNames.toSeq)
+    // idempotent DDL keeps the rows a later write put there
+    store.writeEdges("HAS_KEYWORD", Seq(("u1", "k1")).toDF("src", "dst"))
+    store.createRelTable("HAS_KEYWORD")
+    assert(pairs(store.edges("HAS_KEYWORD")) == Set(("u1", "k1")))
+  }
+
+  test("every flat write primitive is visible to the next read") {
+    val store = new GraphStore(spark, tempRoot())
+    store.writeNodes("link", Seq("u1", "u2", "u3").toDF("name"))
+    store.writeNodes("category", Seq("c1", "c2").toDF("name"))
+    store.writeEdges("BELONGS_TO", Seq(("u1", "c1"), ("u3", "c2")).toDF("src", "dst"))
+    assert(names(store.nodes("link")) == Seq("u1", "u2", "u3"))
+    assert(pairs(store.edges("BELONGS_TO")) == Set(("u1", "c1"), ("u3", "c2")))
+
+    store.writeNodes("link", Seq("u1", "u2", "u3", "u4").toDF("name"))
+    assert(names(store.nodes("link")) == Seq("u1", "u2", "u3", "u4"))
+    store.writeEdges("BELONGS_TO",
+      Seq(("u1", "c1"), ("u3", "c2"), ("u4", "c1")).toDF("src", "dst"))
+    assert(pairs(store.edges("BELONGS_TO")) == Set(("u1", "c1"), ("u3", "c2"), ("u4", "c1")))
+
+    store.detachDelete("link", "name", Seq("u3").toDF("k"), Seq("BELONGS_TO"))
+    assert(names(store.nodes("link")) == Seq("u1", "u2", "u4"))
+    assert(pairs(store.edges("BELONGS_TO")) == Set(("u1", "c1"), ("u4", "c1")))
+
+    store.cleanOrphans("category", "BELONGS_TO")
+    assert(names(store.nodes("category")) == Seq("c1"))
+
+    // compaction swaps in new files: a read still listing the old ones
+    // would fail, one listing the new ones returns the same rows
+    store.writeNodes("link", (1 to 12).map(i => s"u$i").toDF("name").repartition(6))
+    val before = names(store.nodes("link"))
+    store.compactNodes("link", targetRows = 100L)
+    assert(names(store.nodes("link")) == before && before.size == 12)
+  }
+
+  test("partitioned writes and both branches of each bucketed upsert are visible") {
+    val store = new GraphStore(spark, tempRoot())
+    store.writeNodesPartitioned("page",
+      Seq(("p1", "a"), ("p2", "b")).toDF("url", "category"), "category")
+    assert(store.nodes("page").as[(String, String)].collect().toSet == Set(("p1", "a"), ("p2", "b")))
+    store.writeNodesPartitioned("page", Seq(("p3", "c")).toDF("url", "category"), "category")
+    assert(store.nodes("page").as[(String, String)].collect().toSeq == Seq(("p3", "c")))
+
+    val buckets = 4
+    store.writeNodes("link", Seq(("u1", "t1"), ("u2", "t2")).toDF("url", "title"))
+    assert(store.nodes("link").count() == 2)
+    // flat -> bucketed migration
+    store.upsertNodesPartitioned("link", Seq(("u3", "t3")).toDF("url", "title"), "url", buckets)
+    assert(store.nodes("link").as[(String, String)].collect().toSet ==
+      Set(("u1", "t1"), ("u2", "t2"), ("u3", "t3")))
+    // touched-bucket rewrite
+    store.upsertNodesPartitioned("link",
+      Seq(("u1", "T1"), ("u4", "t4")).toDF("url", "title"), "url", buckets)
+    assert(store.nodes("link").as[(String, String)].collect().toSet ==
+      Set(("u1", "T1"), ("u2", "t2"), ("u3", "t3"), ("u4", "t4")))
+
+    store.createRelTable("HAS_KEYWORD")
+    assert(store.edges("HAS_KEYWORD").count() == 0)
+    store.upsertEdgesPartitioned("HAS_KEYWORD",
+      Seq(("u1", "k1"), ("u2", "k1")).toDF("src", "dst"), buckets)
+    assert(pairs(store.edges("HAS_KEYWORD")) == Set(("u1", "k1"), ("u2", "k1")))
+    store.upsertEdgesPartitioned("HAS_KEYWORD",
+      Seq(("u1", "k1"), ("u3", "k2")).toDF("src", "dst"), buckets)
+    assert(pairs(store.edges("HAS_KEYWORD")) == Set(("u1", "k1"), ("u2", "k1"), ("u3", "k2")))
+
+    // the touched-bucket read still prunes partitions at planning time
+    val touched = store.table(store.nodePath("link")).filter($"__bucket".isin(1, 2))
+    touched.collect()
+    assert(touched.queryExecution.executedPlan.toString
+      .matches("(?s).*PartitionFilters: \\[[^\\]]*__bucket[^\\]]*\\].*"))
+  }
+
+  test("a second store on the same root sees the first one's writes") {
+    val root = tempRoot()
+    val writer = new GraphStore(spark, root)
+    writer.writeNodes("keyword", Seq("k1").toDF("name"))
+    // a qualified spelling of the same root names the same tables
+    val reader = new GraphStore(spark, "file:" + root)
+    assert(names(reader.nodes("keyword")) == Seq("k1"))
+    writer.writeNodes("keyword", Seq("k1", "k2").toDF("name"))
+    assert(names(reader.nodes("keyword")) == Seq("k1", "k2"))
+    reader.writeNodes("keyword", Seq("k3").toDF("name"))
+    assert(names(writer.nodes("keyword")) == Seq("k3"))
+  }
+
+  test("two reads of one table self-join like two parquet reads") {
+    val store = new GraphStore(spark, tempRoot())
+    val edges = Seq(("u1", "k1"), ("u2", "k1"), ("u3", "k1"), ("u2", "k2"), ("u3", "k2"),
+      ("u4", "k3")).toDF("src", "dst")
+    store.writeEdges("HAS_KEYWORD", edges)
+    store.writeEdges("BELONGS_TO",
+      Seq(("u1", "c1"), ("u2", "c2"), ("u3", "c1"), ("u4", "c2")).toDF("src", "dst"))
+    val path = store.edgePath("HAS_KEYWORD")
+    def selfJoin(x: org.apache.spark.sql.DataFrame, y: org.apache.spark.sql.DataFrame) =
+      x.as("x").join(y.as("y"), $"x.dst" === $"y.dst" && $"x.src" < $"y.src")
+        .select($"x.src", $"y.src").as[(String, String)].collect().toSeq.sorted
+    val expected = selfJoin(spark.read.parquet(path), spark.read.parquet(path))
+    assert(expected.size == 4)
+    assert(selfJoin(store.edges("HAS_KEYWORD"), store.edges("HAS_KEYWORD")) == expected)
+    val q = graft.query.GraphQueries.interconnections(
+      store.edges("HAS_KEYWORD"), store.edges("BELONGS_TO"))
+    val ref = graft.query.GraphQueries.interconnections(
+      spark.read.parquet(path), spark.read.parquet(store.edgePath("BELONGS_TO")))
+    assert(q.collect().toSet == ref.collect().toSet && q.count() > 0)
+  }
+
+  test("the schema a write hands the reader equals the inferred schema") {
+    val store = new GraphStore(spark, tempRoot())
+    def same(path: String): Unit = {
+      val handed = store.table(path).schema
+      val inferred = spark.read.parquet(path).schema
+      assert(handed == inferred, s"$path\nhanded:   $handed\ninferred: $inferred")
+    }
+    // flat, with non-nullable DDL fields and an array column
+    store.createNodeTable("link", graft.model.GraphSchema.link)
+    same(store.nodePath("link"))
+    val link = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      org.apache.spark.sql.Row("https://a.example/", "c1", "t", Seq("k1", "k2"),
+        null, null, "c1", null, "raw", "clean"))), graft.model.GraphSchema.link)
+    store.writeNodes("link", link)
+    same(store.nodePath("link"))
+    store.createRelTable("HAS_KEYWORD")
+    same(store.edgePath("HAS_KEYWORD"))
+    // hive-partitioned on a column that is not last
+    store.writeNodesPartitioned("page",
+      Seq(("a", "p1", 1), ("b", "p2", 2)).toDF("category", "url", "rank"), "category")
+    same(store.nodePath("page"))
+    // bucketed layout: migration and touched-bucket rewrite
+    store.upsertNodesPartitioned("link", link.withColumn("title", lit("t2")), "url", 4)
+    same(store.nodePath("link"))
+    store.upsertNodesPartitioned("link", link.withColumn("url", lit("https://b.example/")),
+      "url", 4)
+    same(store.nodePath("link"))
+    store.upsertEdgesPartitioned("HAS_KEYWORD", Seq(("u1", "k1")).toDF("src", "dst"), 4)
+    same(store.edgePath("HAS_KEYWORD"))
+    store.upsertEdgesPartitioned("HAS_KEYWORD", Seq(("u2", "k1")).toDF("src", "dst"), 4)
+    same(store.edgePath("HAS_KEYWORD"))
+  }
 }
