@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Parquet-backed labeled-property-graph store.
   *
@@ -30,10 +31,22 @@ import org.apache.spark.sql.types.StructType
   * wrote, no inference job — and every [[nodes]]/[[edges]] call wraps
   * that relation in a fresh plan, running no job and listing no files.
   * A table this session has not written yet is resolved by inference
-  * on first read. The resolved relations are shared by every store on
-  * the same root in a session, so within a session GraphStore must be
-  * the only writer of its root: a file written behind its back stays
-  * invisible until the store next writes that table.
+  * on first read.
+  *
+  * Read results are cached per table version: [[cachedRead]] keeps the
+  * frames of a named read (a serving request's answer) persisted until
+  * the store next writes one of the tables they read, and that write
+  * drops them before it replaces the table. Repeated reads between two
+  * writes therefore scan the cached rows, not the parquet files. The
+  * trade: a cached frame is held in executor storage (memory, spilling
+  * to disk), and it is as large as the frame the caller collects.
+  *
+  * The resolved relations and the cached reads are shared by every
+  * store on the same root in a session, so within a session GraphStore
+  * must be the only writer of its root, and a cached read must not race
+  * a write of a table it reads: a file written behind the store's back
+  * stays invisible, to plain and cached reads alike, until the store
+  * next writes that table.
   */
 final class GraphStore(spark: SparkSession, root: String) {
 
@@ -97,11 +110,31 @@ final class GraphStore(spark: SparkSession, root: String) {
   def nodes(label: String): DataFrame = dropLayout(table(nodePath(label)))
   def edges(relType: String): DataFrame = dropLayout(table(edgePath(relType)))
 
+  /** A named read whose result stays cached until the store next
+    * writes a table it reads (the `labels` node tables and `relTypes`
+    * edge tables). The first call returns the frames `build` makes,
+    * each persisted (lazily: no job runs until the caller collects
+    * them); later calls with the same `name` on the same root return
+    * those frames again, so collecting them scans the cached rows. The
+    * `name` identifies the read, parameters included: two reads under
+    * one name must build the same frames. A frame built over an
+    * earlier frame of the same `build` reads that frame's cache. */
+  def cachedRead(name: String, labels: Seq[String], relTypes: Seq[String])(
+      build: => Seq[DataFrame]): Seq[DataFrame] =
+    GraphStore.stateOf(spark).reads.computeIfAbsent((qualifiedRoot, name), _ =>
+      GraphStore.CachedRead((labels.map(nodePath) ++ relTypes.map(edgePath)).toSet,
+        build.map(_.persist(StorageLevel.MEMORY_AND_DISK)))).frames
+
   def writeNodes(label: String, df: DataFrame): Unit = commitTable(df, nodePath(label))
   def writeEdges(relType: String, df: DataFrame): Unit = commitTable(df, edgePath(relType))
 
-  /** The one way the store writes a table, and the only place a
-    * table's relation is replaced.
+  /** The one way the store writes a table, the only place a table's
+    * relation is replaced and the only place cached reads are dropped.
+    *
+    * Every [[cachedRead]] of the table is dropped first, before the
+    * write and before `refreshByPath`: refreshing a path re-plans every
+    * cached frame that reads it, so a frame about to go stale would
+    * cost a re-plan per write.
     *
     * A whole-table write stages into a temp dir and then swaps it in:
     * overwriting the table we are also reading from would delete the
@@ -115,6 +148,7 @@ final class GraphStore(spark: SparkSession, root: String) {
     * a plain parquet read does, which runs no job either. */
   private def commitTable(df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
       onlyWrittenPartitions: Boolean = false): Unit = {
+    GraphStore.dropCachedReads(spark, path)
     val writer = df.write.mode("overwrite").partitionBy(partitionBy: _*)
     if (onlyWrittenPartitions) {
       writer.option("partitionOverwriteMode", "dynamic").parquet(path)
@@ -250,10 +284,11 @@ final class GraphStore(spark: SparkSession, root: String) {
   def bucketedEdges(relType: String): DataFrame =
     spark.table(bucketTable(relType))
 
-  /** Catalog name scoped by the store root — two stores in one
-    * session must not clobber each other's bucket-table entries. */
+  /** Catalog name scoped by the qualified store root — two stores on
+    * different roots must not clobber each other's bucket-table
+    * entries, and every spelling of one root names the same table. */
   private def bucketTable(relType: String): String =
-    "graft_edges_" + java.lang.Integer.toHexString(root.hashCode) + "_" +
+    "graft_edges_" + java.lang.Integer.toHexString(qualifiedRoot.hashCode) + "_" +
       relType.toLowerCase.replaceAll("[^a-z0-9_]", "_")
 
   // ---- write primitives (set-oriented rewrites of the reference's
@@ -354,29 +389,49 @@ final class GraphStore(spark: SparkSession, root: String) {
 
 object GraphStore {
 
-  /** The store's catalog: each table's resolved parquet relation, per
-    * session and qualified table path, so every store on one root in a
-    * session shares it. Sessions are held weakly, as in
-    * [[graft.DerivedCache]]; a relation references its session, so a
-    * session's entries are also dropped when its context stops. The
-    * per-session map is concurrent: the ingest commits write their
-    * five tables from five threads. */
-  private val relations =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, HadoopFsRelation]]()
+  /** A cached read: the table paths it read and its persisted frames. */
+  private final case class CachedRead(paths: Set[String], frames: Seq[DataFrame])
 
-  private def relationsOf(spark: SparkSession): ConcurrentHashMap[String, HadoopFsRelation] =
-    relations.synchronized {
-      var m = relations.get(spark)
-      if (m == null) {
-        m = new ConcurrentHashMap[String, HadoopFsRelation]()
-        relations.put(spark, m)
+  /** A session's store state: each table's resolved parquet relation,
+    * keyed by qualified table path, and each cached read, keyed by
+    * qualified root and name — so every store on one root in a session
+    * shares both. The maps are concurrent: the ingest commits write
+    * their five tables from five threads. */
+  private final class SessionState {
+    val relations = new ConcurrentHashMap[String, HadoopFsRelation]()
+    val reads = new ConcurrentHashMap[(String, String), CachedRead]()
+  }
+
+  /** Sessions are held weakly, as in [[graft.DerivedCache]]; relations
+    * and frames reference their session, so a session's state is also
+    * dropped when its context stops. */
+  private val sessions = new java.util.WeakHashMap[SparkSession, SessionState]()
+
+  private def stateOf(spark: SparkSession): SessionState =
+    sessions.synchronized {
+      var st = sessions.get(spark)
+      if (st == null) {
+        st = new SessionState
+        sessions.put(spark, st)
         spark.sparkContext.addSparkListener(new SparkListener {
           override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
-            relations.synchronized(relations.remove(spark))
+            sessions.synchronized(sessions.remove(spark))
         })
       }
-      m
+      st
     }
+
+  /** Drop every cached read of `path`. A read's frames are unpersisted
+    * in reverse build order: unpersisting a frame re-plans each cached
+    * frame built over it whose rows are not cached yet, so the frames
+    * built later go first. */
+  private def dropCachedReads(spark: SparkSession, path: String): Unit = {
+    val reads = stateOf(spark).reads
+    reads.forEach { (key, read) =>
+      if (read.paths(path) && reads.remove(key, read))
+        read.frames.reverseIterator.foreach(_.unpersist(blocking = false))
+    }
+  }
 
   private def relationOf(df: DataFrame): HadoopFsRelation =
     df.queryExecution.analyzed.collectFirst {
@@ -387,7 +442,7 @@ object GraphStore {
     * resolved by schema inference on this first read. A commit that
     * races the first read keeps its relation. */
   private def relation(spark: SparkSession, path: String): HadoopFsRelation = {
-    val m = relationsOf(spark)
+    val m = stateOf(spark).relations
     Option(m.get(path)).getOrElse {
       val inferred = relationOf(spark.read.parquet(path))
       Option(m.putIfAbsent(path, inferred)).getOrElse(inferred)
@@ -396,7 +451,7 @@ object GraphStore {
 
   /** Replace a table's relation with the one `df` reads. */
   private def resolved(spark: SparkSession, path: String, df: DataFrame): Unit =
-    relationsOf(spark).put(path, relationOf(df))
+    stateOf(spark).relations.put(path, relationOf(df))
 
   /** Materialize a DataFrame, severing its lineage from any store
     * files it was derived from. Required before a read-modify-write

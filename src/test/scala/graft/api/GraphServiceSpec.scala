@@ -1,16 +1,21 @@
 package graft.api
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.etl.{Enrich, Pipeline}
+import graft.model.EdgeTypes
+import graft.query.GraphQueries
 import graft.store.GraphStore
 
 class GraphServiceSpec extends SparkSpec {
   import spark.implicits._
 
-  private def newService(): (GraphService, GraphStore) = {
-    val root = java.nio.file.Files.createTempDirectory("graftsvc").toString
+  private def newService(): (GraphService, GraphStore) =
+    newService(java.nio.file.Files.createTempDirectory("graftsvc").toString)
+
+  private def newService(root: String): (GraphService, GraphStore) = {
     val store = new GraphStore(spark, root)
     val svc = new GraphService(spark, store,
       new Enrich.DeterministicFetcher(failEvery = 0),
@@ -145,5 +150,101 @@ class GraphServiceSpec extends SparkSpec {
     val urls = (1 to 10).map(i => s"https://cap$i.example/p").toDF("url")
     svc.uploadUrls(urls, batchSize = 3)
     assert(store.nodes("link").count() == 3)
+  }
+
+  // ---- cached reads: index() and graphData() after every write ----
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  private def metaRows(links: (String, String, String)*): DataFrame =
+    links.map { case (url, category, keywords) =>
+      (url, s"Title $url", "graph spark " * 20, category, keywords, "because", "kw")
+    }.toDF("url", "title", "content", "category", "keyword",
+      "category_explanation", "keyword_explanation")
+
+  /** Collect index() and graphData() — so the next write finds their
+    * results cached — and check they are exactly the rows the uncached
+    * queries compute over fresh store reads. Returns the listed urls. */
+  private def assertFresh(svc: GraphService, store: GraphStore): Seq[String] = {
+    val (listing, inter) = svc.index()
+    val hk = store.edges(EdgeTypes.HasKeyword)
+    val bt = store.edges(EdgeTypes.BelongsTo)
+    assert(rows(listing) == rows(svc.displayListing()))
+    assert(inter.collect().toSeq == GraphQueries.interconnections(hk, bt,
+      canonicalPairs = false, limit = 100).collect().toSeq)
+    val (nodes, edges, dups) = svc.graphData()
+    assert(rows(nodes) == rows(GraphQueries.vizNodes(
+      store.nodes("link"), store.nodes("category"), store.nodes("keyword"))))
+    assert(rows(edges) == rows(GraphQueries.vizEdges(bt, hk)))
+    assert(dups.count() == 0)
+    val urls = listing.select("url").as[String].collect().toSeq.sorted
+    assert(urls == store.nodes("link").select("url").as[String].collect().toSeq.sorted)
+    urls
+  }
+
+  test("index() and graphData() return exactly the new rows after every service write") {
+    val (svc, store) = newService()
+    assert(assertFresh(svc, store).isEmpty)
+    svc.uploadMetadataCsv(metaRows(("https://m.example/1", "Tech", "spark, graph"),
+      ("https://m.example/2", "Science", "spark, data")))
+    assert(assertFresh(svc, store) == Seq("https://m.example/1", "https://m.example/2"))
+    assert(svc.index()._2.count() == 2) // the two links share "spark" across categories
+    svc.uploadUrls(Seq("https://u.example/1", "https://u.example/2").toDF("url"))
+    assert(assertFresh(svc, store).size == 4)
+    svc.addLink("https://a.example/3")
+    assert(assertFresh(svc, store).contains("https://a.example/3"))
+    svc.deleteLink("https://m.example/1")
+    val left = assertFresh(svc, store)
+    assert(left.size == 4 && !left.contains("https://m.example/1"))
+    assert(!rows(svc.graphData()._1).exists(_.contains("Link:https://m.example/1")))
+  }
+
+  test("index() and graphData() see Pipeline.run, direct store writes and bucketed upserts") {
+    val (svc, store) = newService()
+    assertFresh(svc, store)
+    val (fetcher, cleaner, classifier) = (new Enrich.DeterministicFetcher(failEvery = 0),
+      new Enrich.PassThroughCleaner, new Enrich.DeterministicClassifier)
+    new Pipeline(spark, fetcher, cleaner, classifier)
+      .run(Seq("https://p.example/1", "https://p.example/2").toDF("url"), store)
+    assert(assertFresh(svc, store) == Seq("https://p.example/1", "https://p.example/2"))
+    store.writeNodes("link", store.nodes("link").filter($"url" =!= "https://p.example/2"))
+    assert(assertFresh(svc, store) == Seq("https://p.example/1"))
+    // the keyword table feeds graphData() only
+    store.writeNodes("keyword", store.nodes("keyword").unionByName(
+      Seq("extra").toDF("name")))
+    assertFresh(svc, store)
+    assert(rows(svc.graphData()._1).exists(_.contains("Keyword:extra")))
+    // bucketed layout: the first upsert migrates the flat tables, the
+    // second rewrites only its buckets (dynamic partition overwrite)
+    val bucketed = new GraphService(spark, store, fetcher, cleaner, classifier,
+      storeBuckets = Some(4))
+    bucketed.addLink("https://b.example/1")
+    assert(assertFresh(svc, store) == Seq("https://b.example/1", "https://p.example/1"))
+    bucketed.addLink("https://b.example/2")
+    assert(assertFresh(bucketed, store) ==
+      Seq("https://b.example/1", "https://b.example/2", "https://p.example/1"))
+  }
+
+  test("a second service on the same root, spelled differently, sees the first one's writes") {
+    val root = java.nio.file.Files.createTempDirectory("graftsvc2").toString
+    val (svc, store) = newService(root)
+    svc.uploadMetadataCsv(metaRows(("https://s.example/1", "Tech", "spark")))
+    val (otherSvc, other) = newService("file:" + root)
+    assert(assertFresh(otherSvc, other) == Seq("https://s.example/1"))
+    svc.uploadMetadataCsv(metaRows(("https://s.example/2", "Science", "spark")))
+    assert(assertFresh(otherSvc, other) == Seq("https://s.example/1", "https://s.example/2"))
+    otherSvc.deleteLink("https://s.example/1")
+    assert(assertFresh(svc, store) == Seq("https://s.example/2"))
+  }
+
+  test("index() caches each interconnection limit as its own answer") {
+    val (svc, _) = newService()
+    svc.uploadMetadataCsv(metaRows(("https://l.example/1", "Tech", "spark"),
+      ("https://l.example/2", "Science", "spark"), ("https://l.example/3", "Health", "spark")))
+    val (_, all) = svc.index(100)
+    val (_, one) = svc.index(1)
+    assert(all.count() == 6 && one.count() == 1)
+    assert(all.collect().head == one.collect().head)
+    assert(svc.index(100)._2.count() == 6 && svc.index(1)._2.count() == 1)
   }
 }

@@ -86,4 +86,12 @@ class BucketedStoreSpec extends SparkSpec {
     assert(!plan.contains("Exchange hashpartitioning"),
       s"bucketed agg should not shuffle:\n$plan")
   }
+
+  test("every spelling of a root reads the same bucketed edge table") {
+    val root = java.nio.file.Files.createTempDirectory("graftbucket4").toString
+    val hk = Seq(("a", "k1"), ("b", "k1"), ("c", "k2")).toDF("src", "dst")
+    new GraphStore(spark, root).writeEdgesBucketed("HAS_KEYWORD", hk, buckets = 2)
+    val other = new GraphStore(spark, "file:" + root).bucketedEdges("HAS_KEYWORD")
+    assert(other.collect().toSet == hk.collect().toSet)
+  }
 }

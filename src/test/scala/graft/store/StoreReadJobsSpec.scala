@@ -4,6 +4,10 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 import graft.SparkSpec
 import graft.api.GraphService
@@ -11,7 +15,10 @@ import graft.etl.{Enrich, Pipeline}
 
 /** Store reads are resolved once per write: reading a table the store
   * has written runs no Spark job (no schema inference, no listing
-  * job), and neither does building the frames of a serving request. */
+  * job), and neither does building the frames of a serving request.
+  * Serving results are cached per table version: a repeated request
+  * scans the cached rows, and a write costs the same jobs with or
+  * without cached results to drop. */
 class StoreReadJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -105,5 +112,78 @@ class StoreReadJobsSpec extends SparkSpec {
     assert(jobsDuring(graph) == 0)
     assert(index._1.count() == 7 && index._2.count() >= 0)
     assert(graph._1.count() > 7 && graph._3.count() == 0)
+  }
+
+  /** A store loaded by the pipeline plus one added link, and its service. */
+  private def servedStore(): (GraphStore, GraphService) = {
+    val store = new GraphStore(spark, tempRoot())
+    val (fetcher, cleaner, classifier) = (new Enrich.DeterministicFetcher(failEvery = 0),
+      new Enrich.PassThroughCleaner, new Enrich.DeterministicClassifier)
+    new Pipeline(spark, fetcher, cleaner, classifier).run((1 to 6)
+      .map(i => s"https://site$i.example/").toDF("url"), store)
+    val svc = new GraphService(spark, store, fetcher, cleaner, classifier)
+    svc.addLink("https://site7.example/")
+    (store, svc)
+  }
+
+  private def serve(svc: GraphService): Seq[DataFrame] = {
+    val (listing, inter) = svc.index()
+    val (nodes, edges, dups) = svc.graphData()
+    val frames = Seq(listing, inter, nodes, edges, dups)
+    frames.foreach(_.collect())
+    frames
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  test("a repeated index() or graphData() runs one job per frame, over the cached rows") {
+    val (_, svc) = servedStore()
+    val first = serve(svc)
+    assert(jobsDuring { val (l, i) = svc.index(); l.collect(); i.collect() } == 2)
+    assert(jobsDuring {
+      val (n, e, d) = svc.graphData(); n.collect(); e.collect(); d.collect()
+    } == 3)
+    val again = serve(svc)
+    assert(again.zip(first).forall { case (a, b) => a eq b })
+    again.foreach { df =>
+      val plan = df.queryExecution.executedPlan
+      assert(Plans.collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty, plan)
+      assert(Plans.collect(plan) { case s: FileSourceScanExec => s }.isEmpty, plan)
+    }
+  }
+
+  test("a write submits the same jobs with cached reads present as with none") {
+    val (cachedStore, cachedSvc) = servedStore()
+    val (plainStore, plainSvc) = servedStore()
+    serve(cachedSvc)
+    def writeJobs(store: GraphStore, svc: GraphService): Seq[Int] = Seq(
+      jobsDuring(svc.addLink("https://site8.example/")),
+      jobsDuring(svc.deleteLink("https://site2.example/")),
+      jobsDuring(store.writeNodes("category", store.nodes("category"))))
+    assert(writeJobs(cachedStore, cachedSvc) == writeJobs(plainStore, plainSvc))
+    assert(serve(cachedSvc).map(_.collect().toSeq.map(_.toString).sorted) ==
+      serve(plainSvc).map(_.collect().toSeq.map(_.toString).sorted))
+  }
+
+  test("cached reads hold at most one persisted RDD per cached frame across write/read cycles") {
+    val (store, svc) = servedStore()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    def cachedRdds = sc.getPersistentRDDs.keys.count(id => !before(id))
+    val framesPerCycle = serve(svc).size
+    val writes: Seq[() => Unit] = Seq(
+      () => store.writeNodes("link", store.nodes("link")),
+      () => store.writeNodes("category", store.nodes("category")),
+      () => store.writeNodes("keyword", store.nodes("keyword")),
+      () => store.writeEdges("BELONGS_TO", store.edges("BELONGS_TO")),
+      () => store.writeEdges("HAS_KEYWORD", store.edges("HAS_KEYWORD")))
+    (1 to 20).foreach { cycle =>
+      writes(cycle % writes.size)()
+      assert(cachedRdds <= framesPerCycle)
+      serve(svc)
+      assert(cachedRdds <= framesPerCycle)
+    }
+    writes.foreach(_())
+    assert(cachedRdds == 0)
   }
 }
